@@ -39,7 +39,8 @@ object Bench {
     // r17: the session builder is SHARED with every measurement probe
     // (tools.BenchSession) so probe sessions can never drift from the
     // bench posture again (ADVICE r16). Conf-identical to the r16
-    // builder; see BenchSession for the per-conf rationale.
+    // builder; see Graft.sessionBuilder and BenchSession for the
+    // per-conf rationale.
     val spark = tools.BenchSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     warmup(spark, sfDir)
@@ -209,9 +210,10 @@ object Bench {
       .collect()
     // PQ family: the nested transform→array_min(struct)→aggregate HOF
     // encode and the dtab[m][codes[m]] ADC lookup pay ~10 s on first
-    // touch (PqProbe) — mostly HOF-interpreter JIT, which transfers
-    // across queries (unlike whole-stage codegen, keyed on exact text;
-    // the per-query median already discards the residual cold rep).
+    // touch (PERF.md, "PQ's nested-HOF encode") — mostly
+    // HOF-interpreter JIT, which transfers across queries (unlike
+    // whole-stage codegen, keyed on exact text; the per-query median
+    // already discards the residual cold rep).
     // Warm the interpreter classes here, not inside a timed rep
     // tuning/accuracy family (round 6): the newest first-touch shapes —
     // wide sig-table self-join folded into a per-pair bitmask, a one-row

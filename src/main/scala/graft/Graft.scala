@@ -12,24 +12,12 @@ import graft.sources.{FeedFetcher, Layout}
   * reference's capabilities (medallion pipeline + SQL serving) plus the
   * training-data extensions (dedup, similarity, text, multimodal).
   *
-  * Sessions should be built with
-  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
-  * (registers `bounded_topk`, `cosine_sim`, `l2_sq`) — see
-  * [[newSession]].
+  * Sessions should be built with [[newSession]], which registers the
+  * graft extensions (`bounded_topk`, `cosine_sim`, `l2_sq`) among the
+  * rest of the library's session posture.
   */
 object Graft {
 
-  /** A session configured the way the library expects: UTC, graft
-    * extensions registered, and the InferFiltersFromGenerate exclusion
-    * that keeps expression-built array pipelines off the pathological
-    * pushdown path (PERF.md §1).
-    *
-    * For LOCAL masters, shuffle partitions default to the core count:
-    * the stock 200 turns every small shuffle into 200 near-empty tasks
-    * (measured 4× on sub-second queries at local[32] — the recurring
-    * benchmarking foot-gun). On cluster masters the setting is left to
-    * the deployment (AQE coalescing + site config own it there).
-    */
   /** Streaming state-store posture shared by every graft session (r16):
     * RocksDB provider + join state format v3 (virtual column families —
     * ONE store per partition for a stream-stream join instead of four).
@@ -70,14 +58,21 @@ object Graft {
     else base
   }
 
-  /** Apply [[stateStoreConfs]] to a session builder. */
-  private[graft] def withStateStoreConfs(
-      b: SparkSession.Builder): SparkSession.Builder =
-    stateStoreConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
-
-  def newSession(master: String = "local[*]",
-                 appName: String = "graft"): SparkSession = {
-    val b = withStateStoreConfs(SparkSession.builder())
+  /** The one session posture every graft session is built with: UTC,
+    * graft extensions registered, the InferFiltersFromGenerate exclusion
+    * that keeps expression-built array pipelines off the pathological
+    * pushdown path (PERF.md §1), and the [[stateStoreConfs]].
+    *
+    * For LOCAL masters, shuffle partitions default to the core count:
+    * the stock 200 turns every small shuffle into 200 near-empty tasks
+    * (measured 4× on sub-second queries at local[32] — the recurring
+    * benchmarking foot-gun). On cluster masters the setting is left to
+    * the deployment (AQE coalescing + site config own it there).
+    */
+  private[graft] def sessionBuilder(master: String,
+                                    appName: String): SparkSession.Builder = {
+    val b = stateStoreConfs
+      .foldLeft(SparkSession.builder()) { case (bb, (k, v)) => bb.config(k, v) }
       .master(master)
       .appName(appName)
       .config("spark.sql.session.timeZone", "UTC")
@@ -86,6 +81,12 @@ object Graft {
       // flag instead of erroring; micros/real-timestamp data ignores it.
       // Tables.epochMs handles both physical shapes downstream.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // InferFiltersFromGenerate synthesizes size(genInput)>0 filters
+      // that predicate-pushdown then rebuilds below the scan with the
+      // full generator expression substituted in — for expression-built
+      // arrays (k-shingles) that re-runs an O(tokens²) build per row on
+      // the unparallelized scan. The rule is an optimization only;
+      // explode drops empty arrays regardless.
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       // cached plans EXPOSE their output partitioning (Spark 4 defaults
@@ -97,13 +98,18 @@ object Graft {
       .config(
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "false")
-    localWorkerThreads(master) match {
-      case Some(cores) =>
-        b.config("spark.sql.shuffle.partitions", cores.toString)
-          .getOrCreate()
-      case None => b.getOrCreate()
-    }
+    localWorkerThreads(master).fold(b)(cores =>
+      b.config("spark.sql.shuffle.partitions", cores.toString))
   }
+
+  /** A session with the [[sessionBuilder]] posture. The default master
+    * is the deployment's (`spark-submit --master` sets `spark.master`),
+    * falling back to `local[*]` for an in-process run.
+    */
+  def newSession(master: String =
+                   sys.props.getOrElse("spark.master", "local[*]"),
+                 appName: String = "graft"): SparkSession =
+    sessionBuilder(master, appName).getOrCreate()
 
   /** Worker-thread count of a LOCAL master string, None for cluster
     * masters. Covers every form Spark's `local` family accepts — a

@@ -117,20 +117,8 @@ object Clusters {
   private def fixpointPartitions(df: DataFrame): Int =
     df.sparkSession.sessionState.conf.numShufflePartitions
 
-  /** Apply the co-location repartition — unless the measurement-only
-    * escape hatch `-Dgraft.fixpoint.colocate=off` is set, which reverts
-    * to the round-12 unpartitioned cache so [[graft.tools
-    * .GraphScaleProbe]] can A/B the two shapes inside one JVM. Not a
-    * user knob: correctness is identical either way; only the
-    * shuffle-per-round accounting differs.
-    */
-  private[graft] def colocateFixpointCaches: Boolean =
-    !sys.props.get("graft.fixpoint.colocate").contains("off")
-
   private def colocated(df: DataFrame, key: String): DataFrame =
-    if (colocateFixpointCaches)
-      df.repartition(fixpointPartitions(df), col(key))
-    else df
+    df.repartition(fixpointPartitions(df), col(key))
 
   private val edgeSchema = StructType(Seq(
     StructField("src", LongType), StructField("dst", LongType)))
@@ -192,8 +180,7 @@ object Clusters {
     * is pinned ≡ the forced-distributed path by ClustersSpec.
     * `graft.graph.local.edges` (sys prop, then
     * SPARK_GRAFT_GRAPH_LOCAL_EDGES) overrides; 0 forces the
-    * distributed path (spec/probe escape hatch, like
-    * `graft.fixpoint.colocate`).
+    * distributed path (spec/probe escape hatch).
     */
   private[graft] def graphLocalEdges: Long =
     sys.props.get("graft.graph.local.edges")
@@ -541,11 +528,9 @@ object Clusters {
     val edgesByC = graft.CacheRegistry.register(
       colocated(eScan, "c")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val edgesByP =
-      if (colocateFixpointCaches) graft.CacheRegistry.register(
-        colocated(eScan, "p")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      else edgesByC // measurement mode: one shared unpartitioned cache
+    val edgesByP = graft.CacheRegistry.register(
+      colocated(eScan, "p")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
     // parquet schema resolution is BY NAME: the read schema must carry
     // this function's own column names, not rankSchema's

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -39,15 +39,7 @@ object GraphScaleProbe {
       .split(",").map(_.trim.toInt).toSeq
     val parts = sys.env.getOrElse("SPARK_GRAFT_PROBE_PARTS", "1,2,3")
       .split(",").map(_.trim.toInt).toSet
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.newSession("local[32]")
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000).selectExpr("sum(id)").collect()
 
@@ -113,35 +105,6 @@ object GraphScaleProbe {
       time(s"synth pagerank |E|=$e")(
         Clusters.pageRank(synth(e), "doc_a", "doc_b").count())
     }
-
-    // ── 2b. co-location A/B at data scale (part 5) ──────────────────────
-    // The round-14 co-located caches cost ~1–2 s of fixed fill work per
-    // fixpoint, visible at sf0.1 where graphs are tiny; this is the
-    // measurement that adjudicates the trade where the DATA term rules:
-    // each fixpoint at 10⁶/10⁷ synthetic edges, co-location on vs off
-    // (-Dgraft.fixpoint.colocate, same JVM, interleaved per size so
-    // session drift can't masquerade as a shape effect).
-    val abSizes = sys.env.getOrElse("SPARK_GRAFT_AB_SIZES",
-        "1000000,10000000")
-      .split(",").map(_.trim.toLong).toSeq
-    val abOrder = sys.env.getOrElse("SPARK_GRAFT_AB_ORDER", "on,off")
-      .split(",").map(_.trim).toSeq
-    // try/finally: a throwing fixpoint must not leave the global
-    // property set (it would silently change every later fixpoint's
-    // cache shape in this JVM — ADVICE r14)
-    if (parts(5)) for (e <- abSizes) try {
-      for (mode <- abOrder) {
-        System.setProperty("graft.fixpoint.colocate", mode)
-        time(s"ab[$mode] cc |E|=$e")(
-          Clusters.connectedComponents(synth(e), "doc_a", "doc_b").count())
-        time(s"ab[$mode] pagerank |E|=$e")(
-          Clusters.pageRank(synth(e), "doc_a", "doc_b").count())
-        time(s"ab[$mode] hits |E|=$e")(
-          Clusters.hits(synth(e), "doc_a", "doc_b").count())
-        time(s"ab[$mode] lpa |E|=$e")(
-          Clusters.labelPropagation(synth(e), "doc_a", "doc_b").count())
-      }
-    } finally System.clearProperty("graft.fixpoint.colocate")
 
     // ── 3. DedupPlan under worst-case exact duplication ────────────────
     def docsX(m: Int): DataFrame = {

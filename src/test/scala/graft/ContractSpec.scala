@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators._
@@ -7,7 +11,8 @@ import graft.operators._
 /** Driver-contract invariants: every declared query is oracle-checked
   * (or explicitly allowlisted rows-only), no orphaned oracle SQL, and no
   * name collisions across operator modules — `Map ++` would silently
-  * drop a query if two modules reused a key.
+  * drop a query if two modules reused a key — and one session posture:
+  * only `Graft` builds a SparkSession.
   */
 class ContractSpec extends AnyFunSuite {
 
@@ -58,5 +63,16 @@ class ContractSpec extends AnyFunSuite {
     for {
       (na, a) <- modules; (nb, b) <- modules if na < nb
     } assert(a.intersect(b).isEmpty, s"$na ∩ $nb = ${a.intersect(b)}")
+  }
+
+  test("SparkSession builders appear only in graft/Graft.scala") {
+    val builderCall = """SparkSession\.builder\(""".r
+    val sites = Seq("src/main/scala", "src/test/scala").flatMap { root =>
+      val walk = Files.walk(Paths.get(root))
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }.filter(p => builderCall.findFirstIn(Files.readString(p)).isDefined)
+    assert(sites.map(_.toString) === Seq("src/main/scala/graft/Graft.scala"),
+      "build sessions through Graft.newSession or tools.BenchSession")
   }
 }
