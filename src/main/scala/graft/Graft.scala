@@ -24,39 +24,30 @@ object Graft {
     * This is the documented production posture for stateful streaming
     * (bounded executor memory, fewer per-commit file operations at any
     * scale); measured locally it cut the stream-stream attribution
-    * gates ~2.5× (SpotBench 7.8 → 3.0 s / 5.5 → 2.6 s — the HDFS
+    * gates ~2.5× (isolated medians 7.8 → 3.0 s / 5.5 → 2.6 s — the HDFS
     * provider spent 45 s of cumulative state-commit time per batch
-    * across 32 partitions × 4 stores). `SPARK_GRAFT_STATE_PROVIDER`
-    * overrides the provider (format v3 is RocksDB-only, so the v3 pin
-    * follows the provider choice). State layout never changes emitted
-    * rows — the stream gates' oracle hashes pin that.
+    * across 32 partitions × 4 stores). State layout never changes
+    * emitted rows — the stream gates' oracle hashes pin that.
     */
-  private[graft] def stateStoreConfs: Seq[(String, String)] = {
-    val provider = sys.env.getOrElse("SPARK_GRAFT_STATE_PROVIDER",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    val base = Seq(
-      "spark.sql.streaming.stateStore.providerClass" -> provider)
-    if (provider.endsWith("RocksDBStateStoreProvider"))
-      base ++ Seq(
-        "spark.sql.streaming.join.stateFormatVersion" -> "3",
-        // r17: changelog checkpointing — each commit uploads the batch's
-        // CHANGELOG instead of a full store snapshot (snapshots move to
-        // background maintenance). The documented low-commit-latency
-        // production posture; StreamProgressProbe measured cumulative
-        // state-commit time on the dedupe gates drop ~40 % with the pair
-        // of knobs (q_stream_neardup_once batch-0 commit 15.5 → 7.9 s
-        // cumulative across 32 partitions).
-        "spark.sql.streaming.stateStore.rocksdb." +
-          "changelogCheckpointing.enabled" -> "true",
-        // r17: skip the get-before-put RocksDB does per state write just
-        // to keep the numRowsTotal progress metric — a write-path tax
-        // the library never reads (metric reports -1; rowsUpdated and
-        // memoryUsedBytes, the ones the probes print, are unaffected).
-        "spark.sql.streaming.stateStore.rocksdb." +
-          "trackTotalNumberOfRows" -> "false")
-    else base
-  }
+  private[graft] val stateStoreConfs: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.join.stateFormatVersion" -> "3",
+    // r17: changelog checkpointing — each commit uploads the batch's
+    // CHANGELOG instead of a full store snapshot (snapshots move to
+    // background maintenance). The documented low-commit-latency
+    // production posture; StreamProgressProbe measured cumulative
+    // state-commit time on the dedupe gates drop ~40 % with the pair
+    // of knobs (q_stream_neardup_once batch-0 commit 15.5 → 7.9 s
+    // cumulative across 32 partitions).
+    "spark.sql.streaming.stateStore.rocksdb." +
+      "changelogCheckpointing.enabled" -> "true",
+    // r17: skip the get-before-put RocksDB does per state write just
+    // to keep the numRowsTotal progress metric — a write-path tax
+    // the library never reads (metric reports -1; rowsUpdated and
+    // memoryUsedBytes, the ones the probes print, are unaffected).
+    "spark.sql.streaming.stateStore.rocksdb." +
+      "trackTotalNumberOfRows" -> "false")
 
   /** The one session posture every graft session is built with: UTC,
     * graft extensions registered, the InferFiltersFromGenerate exclusion

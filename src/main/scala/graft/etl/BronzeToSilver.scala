@@ -94,10 +94,13 @@ object BronzeToSilver {
       s(col("approach.orbiting_body")).as("orbiting_body"))
   }
 
-  /** Full stage: read bronze JSON for `date`, flatten, profile in ONE
-    * aggregate pass (vs the reference's ~105-job print loop, SURVEY.md
-    * §3.2), and write silver partitioned by approach_date.
-    * Returns the profile row for the caller's logs.
+  /** Full stage: read bronze JSON for `date`, flatten, and write silver
+    * partitioned by approach_date. Returns the day's profile as a lazy
+    * ONE-aggregate frame over the flattened rows (vs the reference's
+    * ~105-job print loop, SURVEY.md §3.2) — the rows the reference
+    * profiles, at no cost unless the caller evaluates it. Re-reading
+    * the silver directory instead would list and schema-infer the
+    * whole lake after every day's write.
     */
   def run(spark: SparkSession, layout: Layout, date: String): DataFrame = {
     val feed = spark.read
@@ -114,6 +117,6 @@ object BronzeToSilver {
       .partitionBy("approach_date")
       .parquet(layout.silverAsteroids)
 
-    DataProfiler.profile(spark.read.parquet(layout.silverAsteroids))
+    DataProfiler.profile(silver)
   }
 }

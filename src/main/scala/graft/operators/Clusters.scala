@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -67,8 +69,8 @@ object Clusters {
     val spark = df.sparkSession
     val dir = new Path(scratch, "edges")
     // the edge COUNT rides the (already-eager) truncation write as an
-    // observed metric — it prices the size-adaptive dispatch below
-    // ([[ccLocalEdges]]) without a second scan, the same pattern as
+    // observed metric — it prices the size-adaptive dispatch
+    // ([[SizeDispatch]]) without a second scan, the same pattern as
     // the CC convergence statistic (r16)
     val obs = org.apache.spark.sql.Observation()
     df.observe(obs, count(lit(1)).as("n"))
@@ -77,8 +79,8 @@ object Clusters {
       obs.get("n").asInstanceOf[Long])
   }
 
-  /** [[truncateEdges]], then CO-LOCATE the cache on the per-round join
-    * key (the q_sssp_hops round-14 contract, PlanShapeSpec-pinned):
+  /** CO-LOCATE a truncated edge table on the per-round join key and
+    * cache it (the q_sssp_hops round-14 contract, PlanShapeSpec-pinned):
     * `repartition(key)` before persist makes the InMemoryRelation
     * expose HashPartitioning(key) — under
     * `canChangeCachedPlanOutputPartitioning=false` (set in every engine
@@ -91,37 +93,52 @@ object Clusters {
     * scale) would otherwise leave the cached plan UnknownPartitioning
     * and silently restore the per-round edge shuffle.
     *
-    * The partition COUNT is explicit too ([[fixpointPartitions]]): a
-    * keyed repartition without a count is an AQE optimizable hint, and
-    * AQE coalesces the fill to the advisory-size partition count — at
-    * 10⁷ synthetic edges that froze the cache at a handful of
-    * partitions and every later round's sort/join ran at that
-    * parallelism (GraphScaleProbe measured 78 s vs 21 s for the CC
-    * fixpoint before the count was pinned).
+    * The partition COUNT is explicit too — the session's shuffle
+    * partitions, the count every state-table shuffle targets: a keyed
+    * repartition without a count is an AQE optimizable hint, and AQE
+    * coalesces the fill to the advisory-size partition count — at 10⁷
+    * synthetic edges that froze the cache at a handful of partitions
+    * and every later round's sort/join ran at that parallelism
+    * (GraphScaleProbe measured 78 s vs 21 s for the CC fixpoint before
+    * the count was pinned).
+    *
+    * Only the distributed arms call this, so the driver arm never pays
+    * the repartition shuffle or the fill. A table already cached this
+    * way (Spark's CacheManager matches by plan) is reused as is: the CC
+    * and LPA arms over one [[sharedSymEdges]] scan share one fill.
     */
-  private def materializeEdges(df: DataFrame, scratch: Path,
-                               schema: StructType,
-                               key: String): (DataFrame, Long) = {
-    val (scan, n) = truncateEdges(df, scratch, schema)
-    (graft.CacheRegistry.register(
-      colocated(scan, key)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)),
-      n)
+  private def coLocatedCache(df: DataFrame, key: String): DataFrame = {
+    import org.apache.spark.storage.StorageLevel
+    val co = df.repartition(
+      df.sparkSession.sessionState.conf.numShufflePartitions, col(key))
+    if (co.storageLevel != StorageLevel.NONE) co
+    else graft.CacheRegistry.register(co.persist(StorageLevel.MEMORY_AND_DISK))
   }
-
-  /** The pinned partition count for a fixpoint's co-located cache: the
-    * session's shuffle partitions — the same count every state-table
-    * shuffle targets, so the per-round join is exchange-free on the
-    * cached side AND runs at full configured parallelism.
-    */
-  private def fixpointPartitions(df: DataFrame): Int =
-    df.sparkSession.sessionState.conf.numShufflePartitions
-
-  private def colocated(df: DataFrame, key: String): DataFrame =
-    df.repartition(fixpointPartitions(df), col(key))
 
   private val edgeSchema = StructType(Seq(
     StructField("src", LongType), StructField("dst", LongType)))
+
+  /** Both directions of every pair as (src, dst) longs. */
+  private def symmetric(pairs: DataFrame, src: String,
+                        dst: String): DataFrame =
+    pairs.select(col(src).cast("long").as("src"),
+        col(dst).cast("long").as("dst"))
+      .union(pairs.select(col(dst).cast("long").as("src"),
+        col(src).cast("long").as("dst")))
+
+  /** [[SizeDispatch]] for a graph site: the truncated edge table's two
+    * long columns reach the driver mirror as pairs, and its rows come
+    * back as a LocalRelation with columns `cols`.
+    */
+  private def graphDispatch[T <: Product: TypeTag](site: String,
+      edges: DataFrame, n: Long, cols: String*)(
+      mirror: Array[(Long, Long)] => Seq[T])(
+      distributed: => DataFrame): DataFrame =
+    SizeDispatch(site, n, SizeDispatch.GraphEdges, edges)(rows =>
+      edges.sparkSession.createDataset(
+          mirror(rows.map(r => (r.getLong(0), r.getLong(1)))))(
+          Encoders.product[T])
+        .toDF(cols: _*))(distributed)
 
   /** Connected components of an undirected pair list.
     *
@@ -135,60 +152,33 @@ object Clusters {
   def connectedComponents(pairs: DataFrame, src: String, dst: String,
                           scratchDir: Option[String] = None,
                           maxIter: Int = 25): DataFrame = {
-    // symmetric edge list: min-labels must flow BOTH ways. PERSISTED —
+    // symmetric edge list: min-labels must flow BOTH ways. TRUNCATED —
     // every propagation round joins against it, and the pair source is
     // typically the whole LSH pipeline (recomputing THAT per round
     // multiplied the clustering cost by the iteration count)
     val (edges, n) = sharedSymEdges(pairs, src, dst, scratchDir)
-    connectedComponentsOnEdges(edges, scratchDir, maxIter, Some(n))
+    connectedComponentsOnEdges(edges, n, scratchDir, maxIter)
   }
 
-  /** ONE materialized co-located symmetric edge cache reusable across
-    * several fixpoints over the SAME pair list (r16): the CC and LPA
-    * loops both join edges by `src` every round, so a composite query
+  /** ONE truncated symmetric edge table reusable across several
+    * fixpoints over the SAME pair list (r16): the CC and LPA loops both
+    * join edges by `src` every round, so a composite query
     * (q_modularity scores BOTH partitions of one graph) pays the
-    * symmetrize + lineage truncation + co-location + cache fill once
-    * instead of per loop.
+    * symmetrize + lineage truncation once, and on the distributed arm
+    * the co-location + cache fill once ([[coLocatedCache]]). Returns
+    * the scan and its observed edge count.
     */
   private[graft] def sharedSymEdges(pairs: DataFrame, src: String,
                                     dst: String,
                                     scratchDir: Option[String] = None)
       : (DataFrame, Long) =
-    materializeEdges(
-      pairs.select(col(src).cast("long").as("src"),
-          col(dst).cast("long").as("dst"))
-        .union(pairs.select(col(dst).cast("long").as("src"),
-          col(src).cast("long").as("dst"))),
+    truncateEdges(symmetric(pairs, src, dst),
       new Path(scratchDir.map(d => s"$d/symedges").getOrElse(
         graft.StageDirs.scratch("symedges"))),
-      edgeSchema, key = "src")
-
-  /** Edge-count threshold below which the iterative graph loops (CC,
-    * LPA, PageRank) run their exact DRIVER mirror over the collected
-    * edge list instead of the distributed fixpoint — the broadcast-join
-    * decision applied to graph iteration (r17, guide §1.2 "the
-    * distributed algorithm" + §3.1's size-adaptive strategy pick, and
-    * the same measured-crossover dispatch precedent as the IVF
-    * `assignCells` ladder). 500 000 symmetric edges ≈ 8 MB of
-    * (long, long) — autoBroadcastThreshold territory; a graph that
-    * small gains nothing from O(rounds) distributed iterations whose
-    * per-round fixed cost (write job + observe + re-scan) dominates at
-    * any SF where the graph fits, and its result table comes back as a
-    * LocalRelation every consumer can broadcast. Above the threshold
-    * the fixpoints are untouched. Every driver mirror reproduces the
-    * distributed arithmetic EXACTLY (integer ops, same tie rules) and
-    * is pinned ≡ the forced-distributed path by ClustersSpec.
-    * `graft.graph.local.edges` (sys prop, then
-    * SPARK_GRAFT_GRAPH_LOCAL_EDGES) overrides; 0 forces the
-    * distributed path (spec/probe escape hatch).
-    */
-  private[graft] def graphLocalEdges: Long =
-    sys.props.get("graft.graph.local.edges")
-      .orElse(sys.env.get("SPARK_GRAFT_GRAPH_LOCAL_EDGES"))
-      .map(_.toLong).getOrElse(500000L)
+      edgeSchema)
 
   /** Driver union-find over a collected symmetric edge list (the
-    * below-threshold CC form): union-by-min-root with path compression,
+    * below-bound CC form): union-by-min-root with path compression,
     * so every final root IS its component's minimum id — exactly the
     * fixpoint's cluster_id contract, input-order invariant.
     */
@@ -211,27 +201,23 @@ object Clusters {
     nodes.keys.toSeq.map(id => (id, find(id)))
   }
 
-  /** [[connectedComponents]] over an ALREADY-materialized symmetric
-    * edge table ([[sharedSymEdges]]). `edgeCount` (observed on the
-    * edge-truncation write — no extra job) enables the size-adaptive
-    * driver path below [[ccLocalEdges]]; None always runs the
-    * distributed fixpoint.
+  /** [[connectedComponents]] over a truncated symmetric edge table
+    * ([[sharedSymEdges]]) of `edgeCount` rows. At or below
+    * [[SizeDispatch.GraphEdges]] the driver union-find runs (nodes ≤
+    * 2·edges, returned as a LocalRelation that downstream consumers
+    * broadcast instead of shuffling); above it, the distributed
+    * fixpoint over the co-located cache.
     */
   private[graft] def connectedComponentsOnEdges(
-      edges: DataFrame, scratchDir: Option[String] = None,
-      maxIter: Int = 25, edgeCount: Option[Long] = None): DataFrame = {
-    val localThreshold = graphLocalEdges
-    if (edgeCount.exists(n => n > 0 && n <= localThreshold)) {
-      val spark = edges.sparkSession
-      // bounded by the threshold (≈ 8 MB) — the KMeans-centroid /
-      // MMR-selection class of driver-side table, not a data-scale
-      // collect; nodes ≤ 2·edges, returned as a LocalRelation that
-      // downstream consumers broadcast instead of shuffling
-      val collected = edges.select(col("src"), col("dst")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      import spark.implicits._
-      return localComponents(collected).toDF("id", "cluster_id")
-    }
+      edges: DataFrame, edgeCount: Long, scratchDir: Option[String] = None,
+      maxIter: Int = 25): DataFrame =
+    graphDispatch("cc", edges, edgeCount, "id", "cluster_id")(
+      localComponents)(componentsFixpoint(
+      coLocatedCache(edges, "src"), scratchDir, maxIter))
+
+  private def componentsFixpoint(edges: DataFrame,
+                                 scratchDir: Option[String],
+                                 maxIter: Int): DataFrame = {
     val spark = edges.sparkSession
     val scratch = new Path(scratchDir.getOrElse(
       graft.StageDirs.scratch("cc")))
@@ -359,58 +345,53 @@ object Clusters {
   def pageRank(pairs: DataFrame, src: String, dst: String,
                iters: Int = 5,
                scratchDir: Option[String] = None): DataFrame = {
-    val spark = pairs.sparkSession
     val scratch = new Path(scratchDir.getOrElse(
       graft.StageDirs.scratch("pr")))
-    val fs = scratch.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (eScan, nEdges) =
+      truncateEdges(symmetric(pairs, src, dst), scratch, edgeSchema)
+    graphDispatch("pagerank", eScan, nEdges, "id", "rank_ppm")(
+      localPageRank(_, iters))(pageRankRounds(eScan, iters, scratch))
+  }
 
-    val (eScan, nEdges) = truncateEdges(
-      pairs.select(col(src).cast("long").as("src"),
-          col(dst).cast("long").as("dst"))
-        .union(pairs.select(col(dst).cast("long").as("src"),
-          col(src).cast("long").as("dst"))),
-      scratch, edgeSchema)
-    // size-adaptive driver mirror (r17, see [[graphLocalEdges]]):
-    // identical integer arithmetic — contribution rank div out-degree
-    // (positive BIGINT floor div), update 150000 + 85·Σ div 100 — on
-    // exactly `iters` rounds; pinned ≡ the distributed loop by
-    // ClustersSpec
-    if (nEdges > 0 && nEdges <= graphLocalEdges) {
-      val spark2 = pairs.sparkSession
-      import spark2.implicits._
-      val e = eScan.select(col("src"), col("dst")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      val outDeg = scala.collection.mutable.LongMap.empty[Long]
-      e.foreach { case (s0, _) => outDeg(s0) = outDeg.getOrElse(s0, 0L) + 1L }
-      var rank = scala.collection.mutable.LongMap.empty[Long]
-      outDeg.keys.foreach(id => rank(id) = 1000000L)
-      for (_ <- 1 to iters) {
-        val contrib = scala.collection.mutable.LongMap.empty[Long]
-        e.foreach { case (s0, d) =>
-          contrib(d) = contrib.getOrElse(d, 0L) + rank(s0) / outDeg(s0) }
-        val next = scala.collection.mutable.LongMap.empty[Long]
-        rank.keys.foreach(id =>
-          next(id) = 150000L + 85L * contrib.getOrElse(id, 0L) / 100L)
-        rank = next
-      }
-      return rank.toSeq.toDF("id", "rank_ppm")
+  /** Driver mirror of [[pageRank]]: identical integer arithmetic —
+    * contribution rank div out-degree (positive BIGINT floor div),
+    * update 150000 + 85·Σ div 100 — on exactly `iters` rounds.
+    */
+  private def localPageRank(e: Array[(Long, Long)],
+                            iters: Int): Seq[(Long, Long)] = {
+    val outDeg = scala.collection.mutable.LongMap.empty[Long]
+    e.foreach { case (s0, _) => outDeg(s0) = outDeg.getOrElse(s0, 0L) + 1L }
+    var rank = scala.collection.mutable.LongMap.empty[Long]
+    outDeg.keys.foreach(id => rank(id) = 1000000L)
+    for (_ <- 1 to iters) {
+      val contrib = scala.collection.mutable.LongMap.empty[Long]
+      e.foreach { case (s0, d) =>
+        contrib(d) = contrib.getOrElse(d, 0L) + rank(s0) / outDeg(s0) }
+      val next = scala.collection.mutable.LongMap.empty[Long]
+      rank.keys.foreach(id =>
+        next(id) = 150000L + 85L * contrib.getOrElse(id, 0L) / 100L)
+      rank = next
     }
+    rank.toSeq
+  }
+
+  private def pageRankRounds(eScan: DataFrame, iters: Int,
+                             scratch: Path): DataFrame = {
+    val spark = eScan.sparkSession
+    val fs = scratch.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // (src, dst, d): out-degree attached ONCE — every iteration's
     // contribution term divides by it, so pre-joining keeps the loop
     // body to a single join + aggregate. This is the loop's ONLY
     // corpus-scale operand, so IT is the co-located cache (repartition
-    // by src; see [[materializeEdges]] — the raw edge table is no
-    // longer cached separately, it feeds ed/nodes exactly once each)
-    val ed = graft.CacheRegistry.register(
-      colocated(eScan.join(eScan.groupBy(col("src"))
-          .agg(count(lit(1)).as("d")), "src"), "src")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // by src; see [[coLocatedCache]] — the raw edge table is not
+    // cached separately, it feeds ed/nodes exactly once each)
+    val ed = coLocatedCache(eScan.join(eScan.groupBy(col("src"))
+      .agg(count(lit(1)).as("d")), "src"), "src")
     // nodes co-locate on id: each round's rank update left-joins the
     // dst-keyed contribution sums, and the initial rank table inherits
     // this partitioning, so round 1's join is exchange-free too
-    val nodes = graft.CacheRegistry.register(
-      colocated(eScan.select(col("src").as("id")).distinct(), "id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val nodes =
+      coLocatedCache(eScan.select(col("src").as("id")).distinct(), "id")
 
     var lastDir: Option[Path] = None
     def roundTrip(df: DataFrame, iter: Int): DataFrame = {
@@ -471,66 +452,65 @@ object Clusters {
   def hits(pairs: DataFrame, src: String, dst: String,
            iters: Int = 2,
            scratchDir: Option[String] = None): DataFrame = {
-    val spark = pairs.sparkSession
     val scratch = new Path(scratchDir.getOrElse(
       graft.StageDirs.scratch("hits")))
-    val fs = scratch.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    // The HITS half-steps alternate join keys — auth joins on the hub
-    // side (c), hub joins on the authority side (p) — so ONE co-located
-    // cache can't serve both. Two caches over the same parquet bytes
-    // (2× memory, spill-tolerant, each filled by one edge shuffle) buy
-    // exchange-free edge sides for BOTH half-steps; the alternative is
-    // re-shuffling the corpus-scale edge table 2·iters times.
     val (eScan, nEdges) = truncateEdges(
       pairs.select(col(src).cast("long").as("c"),
           col(dst).cast("long").as("p"))
         .distinct(),
       scratch, StructType(Seq(
         StructField("c", LongType), StructField("p", LongType))))
-    // size-adaptive driver mirror (r17, see [[graphLocalEdges]]):
-    // identical integer arithmetic — round-1 auth = 10⁶·indegree, Σ of
-    // longs, L∞ normalization raw·10⁶ div max in exact big-int floor
-    // division on positives — on exactly `iters` rounds; pinned ≡ the
-    // distributed loop by ClustersSpec
-    if (nEdges > 0 && nEdges <= graphLocalEdges) {
-      import spark.implicits._
-      val e = eScan.select(col("c"), col("p")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      def normalize(raw: scala.collection.mutable.LongMap[Long])
-          : scala.collection.mutable.LongMap[Long] = {
-        val mx = raw.values.max
-        val out = scala.collection.mutable.LongMap.empty[Long]
-        raw.foreach { case (id, v) =>
-          out(id) = ((BigInt(v) * 1000000L) / mx).toLong }
-        out
-      }
-      var hubs: scala.collection.mutable.LongMap[Long] = null
-      var auths: scala.collection.mutable.LongMap[Long] = null
-      for (i <- 1 to iters) {
-        val rawAuth = scala.collection.mutable.LongMap.empty[Long]
-        if (i == 1)
-          e.foreach { case (_, p0) =>
-            rawAuth(p0) = rawAuth.getOrElse(p0, 0L) + 1000000L }
-        else
-          e.foreach { case (c0, p0) =>
-            rawAuth(p0) = rawAuth.getOrElse(p0, 0L) + hubs(c0) }
-        auths = normalize(rawAuth)
-        val rawHub = scala.collection.mutable.LongMap.empty[Long]
-        e.foreach { case (c0, p0) =>
-          rawHub(c0) = rawHub.getOrElse(c0, 0L) + auths(p0) }
-        hubs = normalize(rawHub)
-      }
-      return (hubs.toSeq.map { case (id, s0) => ("hub", id, s0) } ++
-          auths.toSeq.map { case (id, s0) => ("auth", id, s0) })
-        .toDF("side", "id", "score_ppm")
+    graphDispatch("hits", eScan, nEdges, "side", "id", "score_ppm")(
+      localHits(_, iters))(hitsRounds(eScan, iters, scratch))
+  }
+
+  /** Driver mirror of [[hits]]: identical integer arithmetic — round-1
+    * auth = 10⁶·indegree, Σ of longs, L∞ normalization raw·10⁶ div max
+    * in exact big-int floor division on positives — on exactly `iters`
+    * rounds.
+    */
+  private def localHits(e: Array[(Long, Long)],
+                        iters: Int): Seq[(String, Long, Long)] = {
+    def normalize(raw: scala.collection.mutable.LongMap[Long])
+        : scala.collection.mutable.LongMap[Long] = {
+      val mx = raw.values.max
+      val out = scala.collection.mutable.LongMap.empty[Long]
+      raw.foreach { case (id, v) =>
+        out(id) = ((BigInt(v) * 1000000L) / mx).toLong }
+      out
     }
-    val edgesByC = graft.CacheRegistry.register(
-      colocated(eScan, "c")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val edgesByP = graft.CacheRegistry.register(
-      colocated(eScan, "p")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    var hubs: scala.collection.mutable.LongMap[Long] = null
+    var auths: scala.collection.mutable.LongMap[Long] = null
+    for (i <- 1 to iters) {
+      val rawAuth = scala.collection.mutable.LongMap.empty[Long]
+      if (i == 1)
+        e.foreach { case (_, p0) =>
+          rawAuth(p0) = rawAuth.getOrElse(p0, 0L) + 1000000L }
+      else
+        e.foreach { case (c0, p0) =>
+          rawAuth(p0) = rawAuth.getOrElse(p0, 0L) + hubs(c0) }
+      auths = normalize(rawAuth)
+      val rawHub = scala.collection.mutable.LongMap.empty[Long]
+      e.foreach { case (c0, p0) =>
+        rawHub(c0) = rawHub.getOrElse(c0, 0L) + auths(p0) }
+      hubs = normalize(rawHub)
+    }
+    hubs.toSeq.map { case (id, s0) => ("hub", id, s0) } ++
+      auths.toSeq.map { case (id, s0) => ("auth", id, s0) }
+  }
+
+  private def hitsRounds(eScan: DataFrame, iters: Int,
+                         scratch: Path): DataFrame = {
+    val spark = eScan.sparkSession
+    val fs = scratch.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // The HITS half-steps alternate join keys — auth joins on the hub
+    // side (c), hub joins on the authority side (p) — so ONE co-located
+    // cache can't serve both. Two caches over the same parquet bytes
+    // (2× memory, spill-tolerant, each filled by one edge shuffle) buy
+    // exchange-free edge sides for BOTH half-steps; the alternative is
+    // re-shuffling the corpus-scale edge table 2·iters times.
+    val edgesByC = coLocatedCache(eScan, "c")
+    val edgesByP = coLocatedCache(eScan, "p")
 
     // parquet schema resolution is BY NAME: the read schema must carry
     // this function's own column names, not rankSchema's
@@ -611,10 +591,10 @@ object Clusters {
                        iters: Int = 2,
                        scratchDir: Option[String] = None): DataFrame = {
     val (edges, n) = sharedSymEdges(pairs, src, dst, scratchDir)
-    labelPropagationOnEdges(edges, iters, scratchDir, Some(n))
+    labelPropagationOnEdges(edges, n, iters, scratchDir)
   }
 
-  /** Driver mirror of the synchronous LPA rounds (the below-threshold
+  /** Driver mirror of the synchronous LPA rounds (the below-bound
     * form): per round every node adopts the most frequent label among
     * its in-neighbors' PREVIOUS-round labels, ties to the smallest
     * label — exactly the distributed loop's (count DESC, label ASC)
@@ -641,22 +621,21 @@ object Clusters {
     labels.toSeq
   }
 
-  /** [[labelPropagation]] over an ALREADY-materialized symmetric edge
-    * table ([[sharedSymEdges]]) — the shared-cache path composite
-    * queries use. `edgeCount` (observed on the truncation write)
-    * enables the size-adaptive driver mirror below [[graphLocalEdges]].
+  /** [[labelPropagation]] over a truncated symmetric edge table
+    * ([[sharedSymEdges]]) of `edgeCount` rows — the shared-table path
+    * composite queries use. At or below [[SizeDispatch.GraphEdges]] the
+    * driver mirror runs; above it, the rounds over the co-located cache.
     */
   private[graft] def labelPropagationOnEdges(
-      edges: DataFrame, iters: Int = 2,
-      scratchDir: Option[String] = None,
-      edgeCount: Option[Long] = None): DataFrame = {
+      edges: DataFrame, edgeCount: Long, iters: Int = 2,
+      scratchDir: Option[String] = None): DataFrame =
+    graphDispatch("lpa", edges, edgeCount, "id", "community")(
+      localLpa(_, iters))(
+      lpaRounds(coLocatedCache(edges, "src"), iters, scratchDir))
+
+  private def lpaRounds(edges: DataFrame, iters: Int,
+                        scratchDir: Option[String]): DataFrame = {
     val spark = edges.sparkSession
-    if (edgeCount.exists(n => n > 0 && n <= graphLocalEdges)) {
-      import spark.implicits._
-      val collected = edges.select(col("src"), col("dst")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      return localLpa(collected, iters).toDF("id", "community")
-    }
     val scratch = new Path(scratchDir.getOrElse(
       graft.StageDirs.scratch("lpa")))
     val fs = scratch.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -865,42 +844,41 @@ object Clusters {
             rounds: Int = 3,
             scratchDir: Option[String] = None): DataFrame = {
     require(k >= 1 && rounds >= 1)
-    val spark = pairs.sparkSession
     val scratch = new Path(scratchDir.getOrElse(
       graft.StageDirs.scratch("kcore")))
-    val fs = scratch.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (eScan, nEdges) =
+      truncateEdges(symmetric(pairs, src, dst), scratch, edgeSchema)
+    graphDispatch("kcore", eScan, nEdges, "id", "core_degree")(
+      localKCore(_, k, rounds))(
+      // co-located on src: the src-side semi-join is then exchange-free;
+      // the dst-side filter + count still shuffle the SURVIVING subgraph
+      // (which shrinks per round) — two keys per round, one cache
+      kCoreRounds(coLocatedCache(eScan, "src"), k, rounds, scratch))
+  }
 
-    // co-located on src: the src-side semi-join is then exchange-free;
-    // the dst-side filter + count still shuffle the SURVIVING subgraph
-    // (which shrinks per round) — two keys per round, one cache
-    val (edges, nEdges) = materializeEdges(
-      pairs.select(col(src).cast("long").as("src"),
-          col(dst).cast("long").as("dst"))
-        .union(pairs.select(col(dst).cast("long").as("src"),
-          col(src).cast("long").as("dst"))),
-      scratch, edgeSchema, key = "src")
-    // size-adaptive driver mirror (r17, see [[graphLocalEdges]]):
-    // identical peel rounds — degree over the surviving subgraph,
-    // filter ≥ k, exactly `rounds` times; pinned ≡ the distributed
-    // loop by ClustersSpec
-    if (nEdges > 0 && nEdges <= graphLocalEdges) {
-      import spark.implicits._
-      val e = edges.select(col("src"), col("dst")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      var alive = scala.collection.mutable.LongMap.empty[Long]
-      e.foreach { case (_, d) => alive(d) = alive.getOrElse(d, 0L) + 1L }
-      for (_ <- 1 to rounds) {
-        val next = scala.collection.mutable.LongMap.empty[Long]
-        e.foreach { case (s0, d0) =>
-          if (alive.contains(s0) && alive.contains(d0))
-            next(d0) = next.getOrElse(d0, 0L) + 1L }
-        val kept = scala.collection.mutable.LongMap.empty[Long]
-        next.foreach { case (id, d) => if (d >= k) kept(id) = d }
-        alive = kept
-      }
-      return alive.toSeq.toDF("id", "core_degree")
+  /** Driver mirror of [[kCore]]: identical peel rounds — degree over
+    * the surviving subgraph, filter ≥ k, exactly `rounds` times.
+    */
+  private def localKCore(e: Array[(Long, Long)], k: Int,
+                         rounds: Int): Seq[(Long, Long)] = {
+    var alive = scala.collection.mutable.LongMap.empty[Long]
+    e.foreach { case (_, d) => alive(d) = alive.getOrElse(d, 0L) + 1L }
+    for (_ <- 1 to rounds) {
+      val next = scala.collection.mutable.LongMap.empty[Long]
+      e.foreach { case (s0, d0) =>
+        if (alive.contains(s0) && alive.contains(d0))
+          next(d0) = next.getOrElse(d0, 0L) + 1L }
+      val kept = scala.collection.mutable.LongMap.empty[Long]
+      next.foreach { case (id, d) => if (d >= k) kept(id) = d }
+      alive = kept
     }
+    alive.toSeq
+  }
 
+  private def kCoreRounds(edges: DataFrame, k: Int, rounds: Int,
+                          scratch: Path): DataFrame = {
+    val spark = edges.sparkSession
+    val fs = scratch.getFileSystem(spark.sparkContext.hadoopConfiguration)
     var lastDir: Option[Path] = None
     def roundTrip(df: DataFrame, iter: Int): DataFrame = {
       val dir = new Path(scratch, s"alive_$iter")

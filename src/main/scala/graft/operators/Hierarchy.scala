@@ -75,7 +75,7 @@ object Hierarchy {
       // the jump table parquet-round-trips EVERY round: the doubling
       // join composes cur with itself, so a chained plan holds 2^round
       // copies of the base subtree — exponential ANALYSIS cost for a
-      // log-round algorithm (the Clusters.materializeEdges lesson,
+      // log-round algorithm (the Clusters.truncateEdges lesson,
       // round 12). One node-bounded write per round keeps each round's
       // plan one flat self-join.
       val scratch = graft.StageDirs.scratch("hier_closure")

@@ -1822,13 +1822,12 @@ object TextQueries {
           .select(col("doc_a").cast("long").as("doc_a"),
             col("doc_b").cast("long").as("doc_b"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      // both loops consume the SAME symmetric edge list — materialize
-      // (truncate + co-locate + cache) it once, not once per loop (r16)
+      // both loops consume the SAME symmetric edge list — truncate it
+      // once, not once per loop (r16); on the distributed arm both
+      // loops also share its one co-located cache
       val (edges, nEdges) = Clusters.sharedSymEdges(vp, "doc_a", "doc_b")
-      val cc = Clusters.connectedComponentsOnEdges(edges,
-        edgeCount = Some(nEdges))
-      val lpa = Clusters.labelPropagationOnEdges(edges, LPA_ITERS,
-        edgeCount = Some(nEdges))
+      val cc = Clusters.connectedComponentsOnEdges(edges, nEdges)
+      val lpa = Clusters.labelPropagationOnEdges(edges, nEdges, LPA_ITERS)
       Clusters.modularityOf(vp,
           cc.select(col("id"), col("cluster_id")), "cc")
         .unionByName(Clusters.modularityOf(vp,
@@ -3391,29 +3390,25 @@ object TextQueries {
     // jobs, 3.5 → 4.3 s) — so the literal form stands, and the raised
     // codegen cache (Bench session) absorbs the recompiles across reps.
     val w = Array.fill(k + 1)(BigInt(0))
-    if (logitLocalRows > 0 && n <= logitLocalRows) {
-      // r17 size-adaptive driver mirror (the Clusters.graphLocalEdges
-      // pattern, guide §1.2): below the threshold the fit slice is
-      // ≤ 5·10⁵ rows of k+2 longs (~tens of MB — broadcast-class), so
-      // the descent replays on the driver over ONE collect of the
-      // cached z slice instead of `iters` aggregate jobs whose
-      // per-round fixed cost (job launch + literal-plan codegen)
-      // dominates at any SF where the slice fits. The replay is the
-      // EXACT distributed arithmetic: s and r·x_j in Long (the plan's
-      // BIGINT ops), gradient sums in BigInt (the plan's exact
-      // DECIMAL(38,0) sums — integer addition is order-free), the same
-      // truncating div updates. Above the threshold (any real corpus)
-      // the distributed loop below is untouched; LogitSpec pins
-      // mirror ≡ forced-distributed. The collect doubles as the z
-      // cache fill every downstream consumer (scoring, n_correct)
-      // reuses.
-      val rows = z.filter(col(inFitCol))
-        .selectExpr((0 to k).map(j => s"x$j") :+ yCol: _*)
-        .collect().map { r0 =>
-          val a = new Array[Long](k + 2)
-          var j = 0; while (j < k + 2) { a(j) = r0.getLong(j); j += 1 }
-          a
-        }
+    // r17 size-adaptive dispatch ([[SizeDispatch]]): at or
+    // below the bound the fit slice is ≤ 5·10⁵ rows of k+2 longs (~tens
+    // of MB — broadcast-class), so the descent replays on the driver
+    // over ONE collect of the cached z slice instead of `iters`
+    // aggregate jobs whose per-round fixed cost (job launch +
+    // literal-plan codegen) dominates at any SF where the slice fits.
+    // The replay is the EXACT distributed arithmetic: s and r·x_j in
+    // Long (the plan's BIGINT ops), gradient sums in BigInt (the plan's
+    // exact DECIMAL(38,0) sums — integer addition is order-free), the
+    // same truncating div updates. The collect doubles as the z cache
+    // fill every downstream consumer (scoring, n_correct) reuses.
+    SizeDispatch("logit", n, SizeDispatch.FitRows,
+        z.filter(col(inFitCol))
+          .selectExpr((0 to k).map(j => s"x$j") :+ yCol: _*)) { collected =>
+      val rows = collected.map { r0 =>
+        val a = new Array[Long](k + 2)
+        var j = 0; while (j < k + 2) { a(j) = r0.getLong(j); j += 1 }
+        a
+      }
       for (_ <- 1 to iters) {
         // the plan writes each weight as a `<w>L` BIGINT literal, so a
         // weight outside Long range would fail there too — keep parity
@@ -3438,47 +3433,34 @@ object TextQueries {
         for (j <- 0 to k)
           w(j) -= (if (g(j) < 0) -((-g(j)) / n) else g(j) / n)
       }
-      return (LogitModel(means, sds, w.toSeq.map(_.toLong)), z, n)
-    }
-    def sExpr: String =
-      (0 to k).map(j => s"${w(j)}L * x$j").mkString("(", " + ", ")")
-    for (_ <- 1 to iters) {
-      val pE = s"least(1000000L, greatest(0L, 500000L + " +
-        s"(CASE WHEN $sExpr < 0 THEN -((-$sExpr) div ${LOGIT_FIT_SLOPE}L) " +
-        s"ELSE $sExpr div ${LOGIT_FIT_SLOPE}L END)))"
-      // r17: the residual r = pE − y·10⁶ is projected ONCE below the
-      // aggregate instead of re-inlining the piecewise sigmoid into
-      // each of the k+1 gradient sums — identical integer arithmetic
-      // (g_j = Σ r·x_j, product still formed in BIGINT and cast to
-      // DECIMAL(38,0) per row exactly as before), ~(k+1)× less
-      // per-row sigmoid work and a (k+1)×-smaller expression tree for
-      // the per-round optimizer/codegen pass (guide §1.2 step 2).
-      val gAggs = (0 to k).map(j =>
-        sum(expr(s"CAST(r * x$j AS DECIMAL(38,0))")).as(s"g$j"))
-      val row = z.filter(col(inFitCol))
-        .selectExpr(s"($pE - $yCol * 1000000L) AS r" +:
-          (0 to k).map(j => s"x$j"): _*)
-        .agg(gAggs.head, gAggs.tail: _*).head()
-      for (j <- 0 to k) {
-        val g = BigInt(row.getDecimal(j).toBigInteger)
-        w(j) -= (if (g < 0) -((-g) / n) else g / n)
+    } {
+      def sExpr: String =
+        (0 to k).map(j => s"${w(j)}L * x$j").mkString("(", " + ", ")")
+      for (_ <- 1 to iters) {
+        val pE = s"least(1000000L, greatest(0L, 500000L + " +
+          s"(CASE WHEN $sExpr < 0 THEN -((-$sExpr) div ${LOGIT_FIT_SLOPE}L) " +
+          s"ELSE $sExpr div ${LOGIT_FIT_SLOPE}L END)))"
+        // r17: the residual r = pE − y·10⁶ is projected ONCE below the
+        // aggregate instead of re-inlining the piecewise sigmoid into
+        // each of the k+1 gradient sums — identical integer arithmetic
+        // (g_j = Σ r·x_j, product still formed in BIGINT and cast to
+        // DECIMAL(38,0) per row exactly as before), ~(k+1)× less
+        // per-row sigmoid work and a (k+1)×-smaller expression tree for
+        // the per-round optimizer/codegen pass.
+        val gAggs = (0 to k).map(j =>
+          sum(expr(s"CAST(r * x$j AS DECIMAL(38,0))")).as(s"g$j"))
+        val row = z.filter(col(inFitCol))
+          .selectExpr(s"($pE - $yCol * 1000000L) AS r" +:
+            (0 to k).map(j => s"x$j"): _*)
+          .agg(gAggs.head, gAggs.tail: _*).head()
+        for (j <- 0 to k) {
+          val g = BigInt(row.getDecimal(j).toBigInteger)
+          w(j) -= (if (g < 0) -((-g) / n) else g / n)
+        }
       }
     }
     (LogitModel(means, sds, w.toSeq.map(_.toLong)), z, n)
   }
-
-  /** Fit-slice row threshold below which [[fitLogitModel]]'s descent
-    * runs as an exact driver mirror (one collect, zero per-round jobs)
-    * instead of `iters` distributed aggregates. 5·10⁵ rows × (k+2)
-    * longs ≈ 40 MB — the broadcast-class bound Clusters.graphLocalEdges
-    * uses for graphs. `graft.logit.local.rows` (sys prop, then
-    * SPARK_GRAFT_LOGIT_LOCAL_ROWS) overrides; 0 forces the distributed
-    * path (the spec/probe escape hatch).
-    */
-  private[graft] def logitLocalRows: Long =
-    sys.props.get("graft.logit.local.rows")
-      .orElse(sys.env.get("SPARK_GRAFT_LOGIT_LOCAL_ROWS"))
-      .map(_.toLong).getOrElse(500000L)
 
   /** toks + scored CTEs feeding [[langPredSelect]] (reused by the
     * curation funnel; note toks EXCLUDES empty texts, so funnel

@@ -3,9 +3,12 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** ONE bench-protocol session builder, shared by [[graft.Bench]] and
-  * every measurement probe (SpotBench, ExplainDump, StreamProgressProbe,
+  * every measurement probe (ExplainDump, StreamProgressProbe,
   * JobCountProbe): the library posture of [[graft.Graft.sessionBuilder]]
-  * plus the measurement layer below.
+  * plus the measurement layer below. To price a few queries under the
+  * bench protocol (caches released and GC before each rep, median of
+  * 3), run Bench on just those: `SPARK_GRAFT_ONLY=q_a,q_b runMain
+  * graft.Bench`.
   *
   * SPARK_GRAFT_EXTRA_CONF="k=v;k=v" (dev-only A/B hook — the driver
   * never sets it) is folded LAST, after every hard-coded conf, so

@@ -109,13 +109,11 @@ class ClustersSpec extends AnyFunSuite with SparkSpec {
     assert(got(2L)._1 === 2L && got(2L)._3 === 0L)
   }
 
-  /** Run `body` with the size-adaptive driver CC disabled, so it
-    * exercises the distributed fixpoint regardless of graph size.
+  /** Run `body` with every size-adaptive operator on its distributed
+    * arm, regardless of graph size.
     */
-  private def forceDistributedCc[T](body: => T): T = {
-    System.setProperty("graft.graph.local.edges", "0")
-    try body finally System.clearProperty("graft.graph.local.edges")
-  }
+  private def forceDistributedCc[T](body: => T): T =
+    graft.operators.SizeDispatch.forcingDistributed(body)
 
   test("maxIter too small fails loudly, never silently partial") {
     // distributed path forced: below the r17 size threshold the driver
@@ -178,6 +176,22 @@ class ClustersSpec extends AnyFunSuite with SparkSpec {
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(kcore() === forceDistributedCc(kcore()), s"kcore graph $i")
     }
+  }
+
+  test("size-adaptive dispatch: the driver arm fills no cache; CC and " +
+    "LPA on the distributed arm share one co-located edge cache") {
+    def persisted() = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val (edges, n) = Clusters.sharedSymEdges(
+      Seq((1L, 2L), (2L, 3L), (7L, 9L)).toDF("a", "b"), "a", "b")
+    val before = persisted()
+    Clusters.connectedComponentsOnEdges(edges, n).collect()
+    Clusters.labelPropagationOnEdges(edges, n, 2).collect()
+    assert(persisted() -- before === Set.empty)
+    forceDistributedCc {
+      Clusters.connectedComponentsOnEdges(edges, n).collect()
+      Clusters.labelPropagationOnEdges(edges, n, 2).collect()
+    }
+    assert((persisted() -- before).size === 1)
   }
 
   test("random graphs ≡ driver-side union-find reference (10 seeds)") {

@@ -11,8 +11,9 @@ import graft.operators._
 /** Driver-contract invariants: every declared query is oracle-checked
   * (or explicitly allowlisted rows-only), no orphaned oracle SQL, and no
   * name collisions across operator modules — `Map ++` would silently
-  * drop a query if two modules reused a key — and one session posture:
-  * only `Graft` builds a SparkSession.
+  * drop a query if two modules reused a key — one session posture:
+  * only `Graft` builds a SparkSession — and no settings read in library
+  * code.
   */
 class ContractSpec extends AnyFunSuite {
 
@@ -74,5 +75,19 @@ class ContractSpec extends AnyFunSuite {
     }.filter(p => builderCall.findFirstIn(Files.readString(p)).isDefined)
     assert(sites.map(_.toString) === Seq("src/main/scala/graft/Graft.scala"),
       "build sessions through Graft.newSession or tools.BenchSession")
+  }
+
+  test("library code reads no env vars or system properties") {
+    // settings live in Graft, StageDirs, Bench, Verify and tools/ only:
+    // a threshold knob added to an operator fails here
+    val settingRead =
+      """sys\.env|sys\.props|System\.getenv|System\.getProperty""".r
+    val offenders = Seq("operators", "plans", "functions", "etl",
+        "sources", "streaming").flatMap { dir =>
+      val walk = Files.walk(Paths.get(s"src/main/scala/graft/$dir"))
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }.filter(p => settingRead.findFirstIn(Files.readString(p)).isDefined)
+    assert(offenders.isEmpty, s"settings read outside Graft/tools: $offenders")
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.TextQueries
+import graft.operators.{SizeDispatch, TextQueries}
 
 /** Invariants of the trained quality filter (q_logit_fit).
   *
@@ -50,21 +50,18 @@ class LogitFitSpec extends AnyFunSuite with SparkSpec {
 
   test("driver-mirror descent ≡ forced-distributed descent (dispatch " +
     "equivalence, full + sampled)") {
-    // `fit` above ran under the default threshold (mirror at this SF);
+    // `fit` above ran under the default bound (mirror at this SF);
     // force the distributed loop and require bit-identical rows
-    System.setProperty("graft.logit.local.rows", "0")
-    try {
-      val dist = TextQueries.queries("q_logit_fit")(spark, sf).collect()
-      assert(fit.toSeq == dist.toSeq,
-        "driver logit mirror diverged from the distributed descent")
-      val distS =
-        TextQueries.queries("q_logit_fit_sampled")(spark, sf).collect()
-      System.clearProperty("graft.logit.local.rows")
-      val mirS =
-        TextQueries.queries("q_logit_fit_sampled")(spark, sf).collect()
-      assert(mirS.toSeq == distS.toSeq,
-        "sampled-fit mirror diverged from the distributed descent")
-    } finally System.clearProperty("graft.logit.local.rows")
+    val (dist, distS) = SizeDispatch.forcingDistributed {
+      (TextQueries.queries("q_logit_fit")(spark, sf).collect(),
+        TextQueries.queries("q_logit_fit_sampled")(spark, sf).collect())
+    }
+    assert(fit.toSeq == dist.toSeq,
+      "driver logit mirror diverged from the distributed descent")
+    val mirS =
+      TextQueries.queries("q_logit_fit_sampled")(spark, sf).collect()
+    assert(mirS.toSeq == distS.toSeq,
+      "sampled-fit mirror diverged from the distributed descent")
   }
 
   test("sampled fit: trains on a strict slice, still beats the " +

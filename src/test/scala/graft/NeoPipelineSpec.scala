@@ -18,16 +18,19 @@ class NeoPipelineSpec extends AnyFunSuite with SparkSpec {
     Files.createTempDirectory("graft-neo").toString
   private lazy val layout = Layout(base)
 
-  private def runDay(date: String, doc: String): Unit = {
+  /** Runs the day; returns BronzeToSilver's profile of it. */
+  private def runDay(date: String, doc: String) = {
     BronzeIngest.writeRaw(spark, layout, date, doc)
-    BronzeToSilver.run(spark, layout, date)
+    val profile = BronzeToSilver.run(spark, layout, date)
     SilverToGold.run(spark, layout, date)
+    profile
   }
 
-  private lazy val pipelineRan: Unit = {
+  private lazy val day2Profile = {
     runDay(NeoFixture.day1Date, NeoFixture.day1)
     runDay(NeoFixture.day2Date, NeoFixture.day2)
   }
+  private def pipelineRan: Unit = { day2Profile; () }
 
   private def gold(name: String) = {
     pipelineRan
@@ -70,6 +73,16 @@ class NeoPipelineSpec extends AnyFunSuite with SparkSpec {
     assert(types("velocity_km_s") === "double")
     assert(types("miss_km") === "double")
     assert(types("orbiting_body") === "string")
+  }
+
+  test("silver profile covers exactly the day's silver partition") {
+    val p = day2Profile.collect().head
+    val day = spark.read.parquet(layout.silverAsteroids)
+      .filter(col("approach_date") === NeoFixture.day2Date)
+    assert(p.getAs[Long]("n_rows") === day.count())
+    // day 2's "Null" placeholder body is its one null orbiting_body
+    assert(p.getAs[Long]("nulls_orbiting_body") ===
+      day.filter(col("orbiting_body").isNull).count())
   }
 
   test("silver: placeholder strings normalized to real nulls") {
